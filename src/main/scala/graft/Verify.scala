@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for a DuckDB oracle compare. A query that
+  * fails does not stop the others; the artifacts are still written, and
+  * the run then lists the failed queries and exits with status 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -20,6 +22,7 @@ object Verify {
     // query below so silent truncation shows up in the round artifacts
     val caps = graft.skew.CapMetrics.register(spark)
     val capsByQuery = scala.collection.mutable.LinkedHashMap[String, String]()
+    val failed = scala.collection.mutable.ArrayBuffer[String]()
     SparkEntry.queries.foreach { case (name, fn) =>
       caps.clear()
       try {
@@ -30,7 +33,8 @@ object Verify {
         if (snap.nonEmpty) capsByQuery(name) = graft.skew.CapMetrics.toJson(snap)
       }
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: $e")
+        failed += name
       }
     }
     Files.writeString(Paths.get(s"$outDir/cap_metrics.json"),
@@ -51,5 +55,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${SparkEntry.queries.size} queries " +
+        s"failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

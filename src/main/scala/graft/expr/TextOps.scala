@@ -180,13 +180,15 @@ object TextCore {
     * cannot overflow), so % == pmod and Long arithmetic is exact. The
     * declarative `aggregate` fold ran every lambda interpreted and
     * built the "w:"-prefixed string, the hex md5 string and a conv()
-    * parse per token; this is one digest per token, no strings. */
+    * parse per token; this is one digest per token, no strings. A null
+    * token makes the row null, as it makes the HOF fold's sum null. */
   def classifierScore(toks: ArrayData, nBuckets: Long): org.apache.spark.sql.catalyst.InternalRow = {
     val n = toks.numElements()
     val d = java.security.MessageDigest.getInstance("MD5")
     var score = 0L
     var i = 0
     while (i < n) {
+      if (toks.isNullAt(i)) return null
       d.reset()
       d.update('w'.toByte)
       d.update(':'.toByte)
@@ -397,7 +399,10 @@ case class ClassifierScore(child: Expression, nBuckets: Long) extends UnaryExpre
   override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("n_tokens", LongType, nullable = false),
     org.apache.spark.sql.types.StructField("score_int", LongType, nullable = false)))
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = child.nullable || (child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  })
 
   override def checkInputDataTypes(): TypeCheckResult =
     child.dataType match {
@@ -410,7 +415,9 @@ case class ClassifierScore(child: Expression, nBuckets: Long) extends UnaryExpre
     TextCore.classifierScore(toks.asInstanceOf[ArrayData], nBuckets)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.expr.TextCore.classifierScore($t, ${nBuckets}L)")
+    nullSafeCodeGen(ctx, ev, t =>
+      s"${ev.value} = graft.expr.TextCore.classifierScore($t, ${nBuckets}L);" +
+        (if (nullable) s"\n${ev.isNull} = ${ev.value} == null;" else ""))
 
   override protected def withNewChildInternal(newChild: Expression): ClassifierScore =
     copy(child = newChild)

@@ -8,6 +8,22 @@ package graft.matching
  * not on exact scores.
  *
  * All scores are 0..100 doubles.
+ *
+ * Kernel. Every score is built from indel ratios, 100 * 2·LCS / (|a|+|b|),
+ * and the LCS length comes from Hyyrö's bit-parallel algorithm (2004), the
+ * one rapidfuzz uses. The shorter string is the pattern: for each of its
+ * distinct characters, a bit set of the positions holding it, in 64-bit
+ * words (one word per 64 characters, so one kernel serves every length).
+ * Each character c of the other string updates a bit vector S, all ones at
+ * the start, with u = S & match(c); S = (S + u) | (S - u), the addition
+ * carrying from word to word. The LCS is the number of zero bits of S over
+ * the pattern's positions. That is ceil(m/64)·n word steps instead of the
+ * m·n cells of the dynamic program; names here are under 64 characters,
+ * so a pair costs one word step per character of the longer name.
+ * [[partialRatio]] loads the shorter string once and runs the kernel over
+ * each window of the longer one by index. [[prepare]] processes and
+ * tokenizes a string once, so scoring one item against many products
+ * prepares each side a single time.
  */
 object Fuzzy {
 
@@ -31,23 +47,110 @@ object Fuzzy {
     sb.toString.split("\\s+").filter(_.nonEmpty).mkString(" ")
   }
 
-  /** Longest common subsequence length (O(mn), names are short). */
-  private def lcs(a: String, b: String): Int = {
-    if (a.isEmpty || b.isEmpty) return 0
-    val prev = new Array[Int](b.length + 1)
-    val cur = new Array[Int](b.length + 1)
-    var i = 0
-    while (i < a.length) {
-      var j = 0
-      while (j < b.length) {
-        cur(j + 1) = if (a.charAt(i) == b.charAt(j)) prev(j) + 1
-        else math.max(prev(j + 1), cur(j))
-        j += 1
+  /** A processed string with what the token scorers read from it: its
+    * sorted tokens joined by spaces, and its sorted distinct tokens. */
+  final case class Prepared(processed: String, sortedJoin: String, tokenSet: Array[String])
+
+  def prepare(raw: String): Prepared = {
+    val s = process(raw)
+    val toks = sortedTokens(s)
+    Prepared(s, toks.mkString(" "), toks.distinct)
+  }
+
+  /** The bit-parallel LCS kernel (see the object doc), reloaded for each
+    * pattern. Characters map to slots of an open-addressing table; slot h
+    * owns the match words masks(h*words until (h+1)*words). */
+  private final class Kernel {
+    private var keys = new Array[Int](0) // char + 1; 0 marks an empty slot
+    private var masks = new Array[Long](0)
+    private var slotBits = 0
+    private var words = 0
+    private var len = 0
+
+    /** Make p the pattern. */
+    def load(p: String): Unit = {
+      val n = p.length
+      len = n
+      words = (n + 63) >>> 6
+      slotBits = 4
+      while ((1 << slotBits) < 2 * n) slotBits += 1
+      val cap = 1 << slotBits
+      if (keys.length < cap) keys = new Array[Int](cap)
+      else java.util.Arrays.fill(keys, 0, cap, 0)
+      if (masks.length < cap * words) masks = new Array[Long](cap * words)
+      var i = 0
+      while (i < n) {
+        val c = p.charAt(i)
+        val h = slot(c)
+        if (keys(h) == 0) {
+          keys(h) = c + 1
+          java.util.Arrays.fill(masks, h * words, h * words + words, 0L)
+        }
+        masks(h * words + (i >>> 6)) |= 1L << i
+        i += 1
       }
-      System.arraycopy(cur, 0, prev, 0, cur.length)
-      i += 1
     }
-    prev(b.length)
+
+    /** The slot holding c, or the empty slot where c would go. */
+    private def slot(c: Char): Int = {
+      val m = (1 << slotBits) - 1
+      var h = (c * 0x9E3779B1) >>> (32 - slotBits)
+      while (keys(h) != 0 && keys(h) != c + 1) h = (h + 1) & m
+      h
+    }
+
+    /** LCS length of the pattern and t[from, from + n). */
+    def lcs(t: String, from: Int, n: Int): Int = {
+      if (len == 0) return 0
+      val rem = len & 63
+      val last = if (rem == 0) -1L else (1L << rem) - 1
+      if (words == 1) {
+        var s = -1L
+        var j = from
+        while (j < from + n) {
+          val h = slot(t.charAt(j))
+          if (keys(h) != 0) {
+            val u = s & masks(h)
+            s = (s + u) | (s - u)
+          }
+          j += 1
+        }
+        java.lang.Long.bitCount(~s & last)
+      } else {
+        val s = Array.fill(words)(-1L)
+        var j = from
+        while (j < from + n) {
+          val h = slot(t.charAt(j))
+          if (keys(h) != 0) {
+            var carry = 0L
+            var w = 0
+            while (w < words) {
+              val sw = s(w)
+              val u = sw & masks(h * words + w)
+              val sum = sw + u + carry
+              carry = ((sw & u) | ((sw | u) & ~sum)) >>> 63
+              s(w) = sum | (sw - u)
+              w += 1
+            }
+          }
+          j += 1
+        }
+        var lcs = 0
+        var w = 0
+        while (w < words - 1) { lcs += java.lang.Long.bitCount(~s(w)); w += 1 }
+        lcs + java.lang.Long.bitCount(~s(words - 1) & last)
+      }
+    }
+  }
+
+  private val kernel = ThreadLocal.withInitial[Kernel](() => new Kernel)
+
+  /** Longest common subsequence length. */
+  private[graft] def lcs(a: String, b: String): Int = {
+    if (a.isEmpty || b.isEmpty) return 0
+    val k = kernel.get()
+    if (a.length <= b.length) { k.load(a); k.lcs(b, 0, b.length) }
+    else { k.load(b); k.lcs(a, 0, a.length) }
   }
 
   /** Indel-normalized similarity x100 (rapidfuzz fuzz.ratio). */
@@ -64,11 +167,13 @@ object Fuzzy {
     val (s, l) = if (a.length <= b.length) (a, b) else (b, a)
     if (s.isEmpty) return if (l.isEmpty) 100.0 else 0.0
     if (s.length == l.length) return ratio(s, l)
+    val k = kernel.get()
+    k.load(s)
+    val n = 2 * s.length
     var best = 0.0
     var i = 0
     while (i <= l.length - s.length && best < 100.0) {
-      val w = l.substring(i, i + s.length)
-      val r = ratio(s, w)
+      val r = 100.0 * (2.0 * k.lcs(l, i, s.length)) / n
       if (r > best) best = r
       i += 1
     }
@@ -77,31 +182,33 @@ object Fuzzy {
 
   private def sortedTokens(s: String): Array[String] = s.split(" ").filter(_.nonEmpty).sorted
 
-  def tokenSortRatio(a: String, b: String): Double =
-    ratio(sortedTokens(a).mkString(" "), sortedTokens(b).mkString(" "))
-
-  def partialTokenSortRatio(a: String, b: String): Double =
-    partialRatio(sortedTokens(a).mkString(" "), sortedTokens(b).mkString(" "))
-
-  private def tokenSetParts(a: String, b: String): (String, String, String) = {
-    val ta = sortedTokens(a).toSet
-    val tb = sortedTokens(b).toSet
-    val inter = (ta intersect tb).toSeq.sorted.mkString(" ")
-    val diffA = (ta diff tb).toSeq.sorted.mkString(" ")
-    val diffB = (tb diff ta).toSeq.sorted.mkString(" ")
-    val combA = if (inter.isEmpty) diffA else if (diffA.isEmpty) inter else s"$inter $diffA"
-    val combB = if (inter.isEmpty) diffB else if (diffB.isEmpty) inter else s"$inter $diffB"
-    (inter, combA, combB)
+  /** (intersection, intersection + a's rest, intersection + b's rest) of
+    * two sorted distinct token arrays, each part a sorted space join. */
+  private def tokenSetParts(ta: Array[String], tb: Array[String]): (String, String, String) = {
+    val inter, diffA, diffB = new StringBuilder
+    def add(sb: StringBuilder, t: String): Unit = { if (sb.nonEmpty) sb.append(' '); sb.append(t) }
+    var i = 0
+    var j = 0
+    while (i < ta.length || j < tb.length) {
+      val c = if (i == ta.length) 1 else if (j == tb.length) -1 else ta(i).compareTo(tb(j))
+      if (c == 0) { add(inter, ta(i)); i += 1; j += 1 }
+      else if (c < 0) { add(diffA, ta(i)); i += 1 }
+      else { add(diffB, tb(j)); j += 1 }
+    }
+    val in = inter.toString
+    val combA = if (in.isEmpty) diffA.toString else if (diffA.isEmpty) in else s"$in $diffA"
+    val combB = if (in.isEmpty) diffB.toString else if (diffB.isEmpty) in else s"$in $diffB"
+    (in, combA, combB)
   }
 
-  def tokenSetRatio(a: String, b: String): Double = {
-    val (inter, combA, combB) = tokenSetParts(a, b)
+  private def tokenSetScore(ta: Array[String], tb: Array[String]): Double = {
+    val (inter, combA, combB) = tokenSetParts(ta, tb)
     if (inter.nonEmpty && (combA == inter || combB == inter)) return 100.0
-    Seq(ratio(inter, combA), ratio(inter, combB), ratio(combA, combB)).max
+    math.max(math.max(ratio(inter, combA), ratio(inter, combB)), ratio(combA, combB))
   }
 
-  def partialTokenSetRatio(a: String, b: String): Double = {
-    val (inter, combA, combB) = tokenSetParts(a, b)
+  private def partialTokenSetScore(ta: Array[String], tb: Array[String]): Double = {
+    val (inter, combA, combB) = tokenSetParts(ta, tb)
     if (inter.nonEmpty) return 100.0
     // empty intersection -> compare the DEDUPLICATED sorted diff strings
     // (the token_set family is set-based; round-2 differential vs the
@@ -109,22 +216,30 @@ object Fuzzy {
     partialRatio(combA, combB)
   }
 
+  def tokenSetRatio(a: String, b: String): Double =
+    tokenSetScore(sortedTokens(a).distinct, sortedTokens(b).distinct)
+
   /** WRatio (fuzzywuzzy/rapidfuzz weighted composite). Inputs are
     * preprocessed internally, like rapidfuzz's default processor. */
-  def wratio(rawA: String, rawB: String): Double = {
-    val a = process(rawA)
-    val b = process(rawB)
+  def wratio(rawA: String, rawB: String): Double = wratioPrepared(prepare(rawA), prepare(rawB))
+
+  /** [[wratio]] of two prepared strings. */
+  def wratioPrepared(pa: Prepared, pb: Prepared): Double = {
+    val a = pa.processed
+    val b = pb.processed
     if (a.isEmpty || b.isEmpty) return 0.0
     val unbaseScale = 0.95
     val lenRatio = math.max(a.length, b.length).toDouble / math.min(a.length, b.length)
     var end = ratio(a, b)
     if (lenRatio < 1.5) {
-      val tok = math.max(tokenSortRatio(a, b), tokenSetRatio(a, b))
+      val tok = math.max(ratio(pa.sortedJoin, pb.sortedJoin),
+        tokenSetScore(pa.tokenSet, pb.tokenSet))
       math.max(end, tok * unbaseScale)
     } else {
       val partialScale = if (lenRatio < 8.0) 0.9 else 0.6
       end = math.max(end, partialRatio(a, b) * partialScale)
-      val ptok = math.max(partialTokenSortRatio(a, b), partialTokenSetRatio(a, b))
+      val ptok = math.max(partialRatio(pa.sortedJoin, pb.sortedJoin),
+        partialTokenSetScore(pa.tokenSet, pb.tokenSet))
       math.max(end, ptok * unbaseScale * partialScale)
     }
   }

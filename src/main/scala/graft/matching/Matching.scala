@@ -1,19 +1,25 @@
 package graft.matching
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{BooleanType, DoubleType, IntegerType, StructField, StructType}
 import graft.rules.Rules
 
 /**
- * J1/J2 — fuzzy SKU matching as a broadcast similarity join
+ * J1/J2 — fuzzy SKU matching against the products dimension
  * (reference app/pipeline/matcher.py:40-158).
  *
  * Physical shape for 100 TB: the products dimension is tiny (the reference
- * loads it fully into memory, matcher.py:24-38) -> `broadcast()` +
- * BroadcastNestedLoopJoin; the fact side streams through map tasks, no
- * shuffle except the final per-item top-k window, which is partitioned by
- * the item key and therefore skew-free.
+ * loads it fully into memory, matcher.py:24-38), so [[topMatches]]
+ * collects it once per call, prepares its names once, and ships both to
+ * the map tasks. Each item row is scored against every product and keeps
+ * its own top-k in the same map-side pass: no join, no exchange, no sort.
+ * The fact side streams; cost is linear in items x products and spread
+ * over the item partitions. [[topMatchesBlocked]] is the shape for a large
+ * catalog, which cannot be collected.
  */
 object Matching {
 
@@ -32,8 +38,15 @@ object Matching {
    * Top-k fuzzy matches per item (matcher.py find_matches: limit=3,
    * keep score >= suggest threshold, flag auto at >= auto threshold).
    *
-   * @param items    fact side with an `itemKey` id column and `name`
-   * @param products dimension (product_id, sku, name)
+   * Output: every item column, then product_id, match_sku, match_name,
+   * score, rank and is_auto_match; one row per kept match. An item keeps
+   * its `limit` best products with score >= `suggest`, ordered by score
+   * descending, then product_id ascending with nulls first; `rank` is the
+   * 1-based position in that order. Each row is its own item, which is
+   * what a per-`itemKeyCols` ranking gives when the keys are unique.
+   *
+   * @param items    fact side with an `itemKeyCols` id and a `nameCol` string
+   * @param products dimension (product_id, sku, name), small enough to collect
    */
   def topMatches(items: DataFrame, products: DataFrame,
                  itemKeyCols: Seq[String], nameCol: String = "name",
@@ -42,15 +55,58 @@ object Matching {
                  auto: Double = Rules.autoMatchThreshold): DataFrame = {
     val prods = products.select(
       col("product_id"), col("sku").as("match_sku"), col("name").as("match_name"))
-    val scored = items
-      .crossJoin(broadcast(prods))
-      .withColumn("score", wratioUdf(col(nameCol), col("match_name")))
-    val w = Window.partitionBy(itemKeyCols.map(col): _*)
-      .orderBy(desc("score"), asc("product_id")) // deterministic tie-break
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= limit && col("score") >= suggest)
-      .withColumn("is_auto_match", col("score") >= auto)
+    val dim = inRankOrder(prods)
+    val names = dim.map(r => Fuzzy.prepare(r.getString(2)))
+    val nameAt = items.schema.fieldIndex(nameCol)
+    val schema = StructType(items.schema.fields ++ prods.schema.fields ++ Seq(
+      StructField("score", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("is_auto_match", BooleanType, nullable = false)))
+    items.mapPartitions { rows =>
+      rows.flatMap { item =>
+        val (hits, scores) = best(Fuzzy.prepare(item.getString(nameAt)), names, limit, suggest)
+        Iterator.tabulate(hits.length) { k =>
+          Row.fromSeq(item.toSeq ++ dim(hits(k)).toSeq ++
+            Seq(scores(k), k + 1, scores(k) >= auto))
+        }
+      }
+    }(Encoders.row(schema))
+  }
+
+  /** The collected dimension, sorted as the rank breaks score ties:
+    * product_id ascending, nulls first, in Spark's ordering of its type.
+    * The sort is stable, so equal ids keep their collected order. */
+  private def inRankOrder(prods: DataFrame): Array[Row] = {
+    val dim = prods.collect()
+    val idType = prods.schema.head.dataType
+    val order = InterpretedOrdering.forSchema(Seq(idType))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+    val ids = dim.map(r => InternalRow(toCatalyst(r.get(0))))
+    dim.indices.sortWith((i, j) => order.compare(ids(i), ids(j)) < 0).map(dim).toArray
+  }
+
+  /** Indices into `names` and scores of the item's `limit` best names with
+    * score >= `suggest`, best first; equal scores keep index order. */
+  private def best(item: Fuzzy.Prepared, names: Array[Fuzzy.Prepared], limit: Int,
+                   suggest: Double): (Array[Int], Array[Double]) = {
+    val k = math.max(0, math.min(limit, names.length))
+    val hits = new Array[Int](k)
+    val scores = new Array[Double](k)
+    var n = 0
+    var i = 0
+    while (i < names.length && k > 0) {
+      val s = Fuzzy.wratioPrepared(item, names(i))
+      if (s >= suggest && (n < k || s > scores(k - 1))) {
+        var p = if (n < k) n else k - 1
+        while (p > 0 && scores(p - 1) < s) {
+          hits(p) = hits(p - 1); scores(p) = scores(p - 1); p -= 1
+        }
+        hits(p) = i; scores(p) = s
+        if (n < k) n += 1
+      }
+      i += 1
+    }
+    (java.util.Arrays.copyOf(hits, n), java.util.Arrays.copyOf(scores, n))
   }
 
   /** Blocking keys: the processed tokens UNION every token's character

@@ -125,6 +125,34 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("ClassifierScore: a null token makes the row null, codegen and interpreted") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("toks", ArrayType(StringType, containsNull = true), nullable = true)))
+    val rows = Seq(Row(0L, Seq("a", null, "b")), Row(1L, Seq("a", "b")), Row(2L, null),
+      Row(3L, Seq(null)), Row(4L, Seq.empty[String]))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    val hof = graft.text.TextAnalysis.hashClassifierScoreHof(
+      spark.createDataFrame(Seq((1L, "a b"))).toDF("doc_id", "text"), "doc_id", "text", 1024)
+      .head()
+    for (wholeStage <- Seq("true", "false"); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val cs = df.select(col("id"), graft.expr.textops.classifier_score(col("toks"), 1024L))
+        assert(cs.schema(1).nullable)
+        val out = cs.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+        assert(out(0L) == null && out(2L) == null && out(3L) == null, s"$mode: $out")
+        assert(out(1L) == Row(hof.getLong(1), hof.getLong(2)), s"$mode: $out")
+        assert(out(4L) == Row(0L, 0L), s"$mode: $out")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+  }
+
   test("interpreted (lambda) path matches codegen for tokens/shingles") {
     // evaluate the native expressions INSIDE a transform lambda (eval path)
     val df = docsDf.limit(50).unionByName(advDf)

@@ -29,6 +29,25 @@ object WRatioDump {
       case c => c.toString
     } + "\""
 
+  /** `words` repeated and cut to exactly n chars, also after processing. */
+  private def sized(n: Int, words: String): String = {
+    val s = ((words + " ") * (n / (words.length + 1) + 1)).take(n)
+    val out = if (s.endsWith(" ")) s.init + "x" else s
+    require(Fuzzy.process(out).length == n, s"'$out' does not process to $n chars")
+    out
+  }
+
+  /** Pairs longer than one 64-bit kernel word after processing: 64, 65 and
+    * ~130 chars, on both length-ratio branches (< 1.5: ratio and token
+    * scores; >= 1.5: partial scores, with 64- and 65-char patterns). */
+  private def longPairs: Seq[(String, String)] = Seq(
+    (sized(64, "кабель силовой ввгнг"), sized(64, "силовой кабель ввгнг")),
+    (sized(65, "кабель медный 3х2 5"), sized(64, "кабель медный 3x2 5")),
+    (sized(130, "провод пв3 1х16 желто зеленый"), sized(128, "провод пв 3 1х16 желтый")),
+    (sized(129, "ab ba aab"), sized(65, "ab ba")),
+    (sized(64, "кабель ввг"), sized(130, "кабель силовой ввг")),
+    (sized(65, "сип 4 4х25"), sized(600, "сип 4 4х25 гост")))
+
   def main(args: Array[String]): Unit = {
     val nTurns = if (args.length > 1) args(1).toInt else 1500
     // extracted names: run the engine over synthetic turns, collect distinct
@@ -48,7 +67,7 @@ object WRatioDump {
       ("a", "a" * 12), ("ab", "ab" * 8), ("x y z", "z y x"),
       ("кабель ввг 3х2.5", "ввг кабель 3х2,5"), ("１２３", "123"),
       ("Ёлка", "елка"), ("ООО СТАРТ", "старт ооо"), ("№5", "N5"),
-      ("a" * 8, "a" * 64), ("токен один", "токен один токен два токен три"))
+      ("a" * 8, "a" * 64), ("токен один", "токен один токен два токен три")) ++ longPairs
     val sb = new StringBuilder
     def emit(a: String, b: String): Unit = {
       val s = Fuzzy.wratio(a, b)
