@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main (driver contract): one JSON line with per-query seconds on
  * SPARK_GRAFT_SF_DIR, plus the north-rule evidence — extraction throughput
@@ -9,18 +7,6 @@ import org.apache.spark.sql.SparkSession
  * sandbox stand-in for N vs 4N executors) and the scaling efficiency.
  */
 object Bench {
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private def time[A](f: => A): Double = {
     val t0 = System.nanoTime()
@@ -170,36 +156,14 @@ object Bench {
     // cap at 1.0: on noisy runs the extraction can out-scale the microbench
     val normalizedEff = math.min(1.0, efficiency / engineEff)
 
-    val spark = session(cpus)
+    val spark = SparkEntry.session(cpus)
     // cap-drop observability (graft.skew.CapMetrics): per-site dropped
     // keys/rows from every KeyCaps guard that fired during the benched
     // queries — surfaced in the JSON line so silent truncation is visible
     val caps = graft.skew.CapMetrics.register(spark)
 
     // -- per-query timings on the sf dir ---------------------------------
-    val benchQueries = Seq(
-      "q02_parse_number", "q05_regex_extract", "q06_dedup_firstwins",
-      "q07_group_stats", "q10_topk", "q11_fuzzy_topk", "q12_dedup_exact",
-      "q15_token_counts", "q17_sessionize", "q18_extract_turns",
-      "q19_extract_items", "q21_minhash_candidates", "q22_simhash_candidates",
-      "q24_ann_topk", "q25_ann_lsh", "q26_multimodal_meta", "q30_ann_ivf", "q34_lsh_dedup",
-      "q35_distinctive_terms", "q37_contamination", "q38_boilerplate",
-      "q39_asof_join", "q40_range_join", "q41_blocked_match",
-      "q43_repetition", "q44_corpus_filter", "q45_stratified_sample",
-      "q46_pack_sequences", "q47_quantize_int8", "q48_source_filter",
-      "q49_session_window", "q50_contamination_bloom", "q51_dup_spans",
-      "q52_cluster_best", "q53_lexical_commonness", "q54_vocab_topk",
-      "q55_source_mix", "q56_semdedup_pairs", "q57_corpus_chain",
-      "q58_incremental_dedup", "q59_semdedup_keep",
-      "q60_semdedup_incremental", "q61_remove_dup_spans", "q62_bpe_pairs",
-      "q63_pack_whole", "q64_strip_boiler_turns", "q65_length_profile",
-      "q66_conv_integrity", "q67_global_shuffle", "q68_hash_classifier",
-      "q69_truncate_context", "q70_chunk_docs", "q71_conv_dedup",
-      "q72_agent_loops", "q73_repair_order", "q74_preference_pairs",
-      "q75_temperature_sample", "q76_dup_flow_matrix", "q77_curriculum",
-      "q78_transcript_chain", "q79_kmv_sketch", "q80_tool_transitions",
-      "q81_bottomk_sample", "q82_centroid_sim", "q83_epoch_repeats",
-      "q84_bottomk_per_group", "q85_oov_audit")
+    val benchQueries = SparkEntry.benchQueries
     val all = SparkEntry.queries
     // warmup: run every benched query once against the smallest sf dir —
     // same plans, so codegen + JIT are hot and first-query JVM warmup is

@@ -6,13 +6,25 @@ import org.apache.spark.sql.expressions.Window
 import graft.expr.functions.parse_number
 
 /**
- * Driver contract (see SURVEY.md §7): one `queries` entry per implemented
- * operator family, with a DuckDB-equivalent `oracleSql` wherever the
- * operator is SQL-expressible; engine-level operators (the 7-parser turn
- * extraction, WRatio matching, MinHash/SimHash whose hash functions are
- * engine-specific) are rows-only entries backed by ScalaTest golden specs.
+ * Driver contract (see SURVEY.md §7): one [[SparkEntry.registry]] row per
+ * implemented operator family, each with its DuckDB oracle SQL; the
+ * engine-level operators no SQL engine can recompute (the 7-parser turn
+ * extraction, WRatio matching) are oracled by committed golden parquet.
  */
 object SparkEntry {
+
+  /** The session every driver main and dev probe runs in. */
+  def session(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -2089,181 +2101,112 @@ object SparkEntry {
       |    THEN coalesce(agg.n_oov, 0)::DOUBLE / agg.n_tokens::DOUBLE END AS oov_rate
       |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin
 
-  // -------------------------------------------------------------------------
+  // ---- the query registry ---------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_text_metrics" -> (qTextMetrics _),
-    "q02_parse_number" -> (qParseNumber _),
-    "q03_line_explode" -> (qLineExplode _),
-    "q04_line_filters" -> (qLineFilters _),
-    "q05_regex_extract" -> (qRegexExtract _),
-    "q06_dedup_firstwins" -> (qDedupFirstWins _),
-    "q07_group_stats" -> (qGroupStats _),
-    "q08_best_argmax" -> (qBestArgmax _),
-    "q09_doctype_scores" -> (qDoctypeScores _),
-    "q10_topk" -> (qTopK _),
-    "q11_fuzzy_topk" -> (qFuzzyTopK _),
-    "q12_dedup_exact" -> (qDedupExact _),
-    "q13_ngram_jaccard" -> (qNgramJaccard _),
-    "q14_lang_id" -> (qLangId _),
-    "q15_token_counts" -> (qTokenCounts _),
-    "q16_fingerprint" -> (qFingerprint _),
-    "q17_sessionize" -> (qSessionize _),
-    "q18_extract_turns" -> (qExtractTurns _),
-    "q19_extract_items" -> (qExtractItems _),
-    "q20_wratio_match" -> (qWratioMatch _),
-    "q21_minhash_candidates" -> (qMinhashCandidates _),
-    "q22_simhash_candidates" -> (qSimhashCandidates _),
-    "q23_embed_neardup" -> (qEmbedNearDup _),
-    "q24_ann_topk" -> (qAnnTopK _),
-    "q25_ann_lsh" -> (qAnnLsh _),
-    "q26_multimodal_meta" -> (qMultimodalMeta _),
-    "q27_join_agg" -> (qJoinAgg _),
-    "q30_ann_ivf" -> (qAnnIvf _),
-    "q31_dedup_clusters" -> (qDedupClusters _),
-    "q32_quality_score" -> (qQuality _),
-    "q33_det_sample" -> (qSample _),
-    "q28_rollup" -> (qRollup _),
-    "q29_running_sum" -> (qRunningSum _),
-    "q34_lsh_dedup" -> (qLshDedup _),
-    "q35_distinctive_terms" -> (qDistinctiveTerms _),
-    "q36_pii_scrub" -> (qPiiScrub _),
-    "q37_contamination" -> (qContamination _),
-    "q38_boilerplate" -> (qBoilerplate _),
-    "q39_asof_join" -> (qAsofJoin _),
-    "q40_range_join" -> (qRangeJoin _),
-    "q41_blocked_match" -> (qBlockedMatch _),
-    "q42_asof_salted" -> (qAsofSalted _),
-    "q43_repetition" -> (qRepetition _),
-    "q44_corpus_filter" -> (qCorpusFilter _),
-    "q45_stratified_sample" -> (qStratifiedSample _),
-    "q46_pack_sequences" -> (qPackSequences _),
-    "q47_quantize_int8" -> (qQuantize _),
-    "q48_source_filter" -> (qSourceFilter _),
-    "q49_session_window" -> (qSessionWindow _),
-    "q50_contamination_bloom" -> (qContaminationBloom _),
-    "q51_dup_spans" -> (qDupSpans _),
-    "q52_cluster_best" -> (qClusterBest _),
-    "q53_lexical_commonness" -> (qLexicalCommonness _),
-    "q54_vocab_topk" -> (qVocabTopK _),
-    "q55_source_mix" -> (qSourceMix _),
-    "q56_semdedup_pairs" -> (qSemDedup _),
-    "q57_corpus_chain" -> (qCorpusChain _),
-    "q58_incremental_dedup" -> (qIncrementalDedup _),
-    "q59_semdedup_keep" -> (qSemDedupKeep _),
-    "q60_semdedup_incremental" -> (qSemDedupIncr _),
-    "q61_remove_dup_spans" -> (qRemoveDupSpans _),
-    "q62_bpe_pairs" -> (qBpePairs _),
-    "q63_pack_whole" -> (qPackWhole _),
-    "q64_strip_boiler_turns" -> (qStripBoilerTurns _),
-    "q65_length_profile" -> (qLengthProfile _),
-    "q66_conv_integrity" -> (qConvIntegrity _),
-    "q67_global_shuffle" -> (qGlobalShuffle _),
-    "q68_hash_classifier" -> (qHashClassifier _),
-    "q69_truncate_context" -> (qTruncateContext _),
-    "q70_chunk_docs" -> (qChunkDocs _),
-    "q71_conv_dedup" -> (qConvDedup _),
-    "q72_agent_loops" -> (qAgentLoops _),
-    "q73_repair_order" -> (qRepairOrder _),
-    "q74_preference_pairs" -> (qPreferencePairs _),
-    "q75_temperature_sample" -> (qTemperatureSample _),
-    "q76_dup_flow_matrix" -> (qDupFlowMatrix _),
-    "q77_curriculum" -> (qCurriculum _),
-    "q78_transcript_chain" -> (qTranscriptChain _),
-    "q79_kmv_sketch" -> (qKmvSketch _),
-    "q80_tool_transitions" -> (qToolTransitions _),
-    "q81_bottomk_sample" -> (qBottomKSample _),
-    "q82_centroid_sim" -> (qCentroidSim _),
-    "q83_epoch_repeats" -> (qEpochRepeats _),
-    "q84_bottomk_per_group" -> (qBottomKPerGroup _),
-    "q85_oov_audit" -> (qOovAudit _))
+  /** One query of the driver contract: its Spark plan over an sf dir, the
+    * DuckDB oracle SQL its output is compared with, and whether
+    * [[Bench]] times it. */
+  final case class Q(name: String, plan: (SparkSession, String) => DataFrame,
+                     oracle: String, bench: Boolean)
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_text_metrics" -> oTextMetrics,
-    "q02_parse_number" -> (pnumMacro + ";\n" + oParseNumber),
-    "q03_line_explode" -> oLineExplode,
-    "q04_line_filters" -> oLineFilters,
-    "q05_regex_extract" -> oRegexExtract,
-    "q06_dedup_firstwins" -> oDedupFirstWins,
-    "q07_group_stats" -> oGroupStats,
-    "q08_best_argmax" -> oBestArgmax,
-    "q09_doctype_scores" -> oDoctypeScores,
-    "q10_topk" -> oTopK,
-    "q11_fuzzy_topk" -> oFuzzyTopK,
-    "q12_dedup_exact" -> oDedupExact,
-    "q13_ngram_jaccard" -> oNgramJaccardFull,
-    "q14_lang_id" -> oLangId,
-    "q15_token_counts" -> oTokenCounts,
-    "q16_fingerprint" -> oFingerprint,
-    "q17_sessionize" -> oSessionize,
-    "q18_extract_turns" -> goldenOracleSql("q18_extract_turns"),
-    "q19_extract_items" -> goldenOracleSql("q19_extract_items"),
-    "q20_wratio_match" -> goldenOracleSql("q20_wratio_match"),
-    "q21_minhash_candidates" -> minhashCandSql(k = 3, bands = 8, rowsPerBand = 4, maxBucket = 10000),
-    "q22_simhash_candidates" -> simhashCandSql(maxHamming = 3, maxBucket = 10000),
-    "q23_embed_neardup" -> oEmbedNearDup,
-    "q24_ann_topk" -> oAnnTopK,
-    "q25_ann_lsh" -> lshPairsSql(nPlanes = 6, dim = 64, threshold = 0.3, maxBucket = 10000),
-    "q26_multimodal_meta" -> oMultimodalMeta,
-    "q30_ann_ivf" -> ivfSql(k = 16, nProbe = 4, topK = 5, nQueries = 10, trainN = 4096),
-    "q34_lsh_dedup" -> oLshDedup,
-    "q35_distinctive_terms" -> oDistinctiveTerms,
-    "q36_pii_scrub" -> oPiiScrub,
-    "q37_contamination" -> oContamination,
-    "q38_boilerplate" -> oBoilerplate,
-    "q39_asof_join" -> oAsofJoin,
-    "q40_range_join" -> oRangeJoin,
-    "q27_join_agg" -> oJoinAgg,
-    "q28_rollup" -> oRollup,
-    "q29_running_sum" -> oRunningSum,
-    "q31_dedup_clusters" -> oDedupClusters,
-    "q32_quality_score" -> oQuality,
-    "q33_det_sample" -> oSample,
-    "q41_blocked_match" -> oBlockedMatch,
-    "q42_asof_salted" -> oAsofSaltedHot,
-    "q43_repetition" -> oRepetition,
-    "q44_corpus_filter" -> oCorpusFilter,
-    "q45_stratified_sample" -> oStratifiedSample,
-    "q46_pack_sequences" -> oPackSequences,
-    "q47_quantize_int8" -> oQuantize,
-    "q48_source_filter" -> oSourceFilter,
-    "q49_session_window" -> oSessionWindow,
-    "q50_contamination_bloom" -> oContamination,
-    "q51_dup_spans" -> oDupSpans,
-    "q52_cluster_best" -> oClusterBest,
-    "q53_lexical_commonness" -> oLexicalCommonness,
-    "q54_vocab_topk" -> oVocabTopK,
-    "q55_source_mix" -> oSourceMix,
-    "q56_semdedup_pairs" -> oSemDedup,
-    "q57_corpus_chain" -> oCorpusChain,
-    "q58_incremental_dedup" -> oLshDedup,
-    "q59_semdedup_keep" -> oSemDedupKeep,
-    "q60_semdedup_incremental" -> oSemDedupIncr,
-    "q61_remove_dup_spans" -> oRemoveDupSpans,
-    "q62_bpe_pairs" -> oBpePairs,
-    "q63_pack_whole" -> oPackWhole,
-    "q64_strip_boiler_turns" -> oStripBoilerTurns,
-    "q65_length_profile" -> oLengthProfile,
-    "q66_conv_integrity" -> oConvIntegrity,
-    "q67_global_shuffle" -> oGlobalShuffle,
-    "q68_hash_classifier" -> oHashClassifier,
-    "q69_truncate_context" -> oTruncateContext,
-    "q70_chunk_docs" -> oChunkDocs,
-    "q71_conv_dedup" -> oConvDedup,
-    "q72_agent_loops" -> oAgentLoops,
-    "q73_repair_order" -> oRepairOrder,
-    "q74_preference_pairs" -> oPreferencePairs,
-    "q75_temperature_sample" -> oTemperatureSample,
-    "q76_dup_flow_matrix" -> oDupFlowMatrix,
-    "q77_curriculum" -> oCurriculum,
-    "q78_transcript_chain" -> oTranscriptChain,
-    "q79_kmv_sketch" -> oKmvSketch,
-    "q80_tool_transitions" -> oToolTransitions,
-    "q81_bottomk_sample" -> oBottomKSample,
-    "q82_centroid_sim" -> oCentroidSim,
-    "q83_epoch_repeats" -> oEpochRepeats,
-    "q84_bottomk_per_group" -> oBottomKPerGroup,
-    "q85_oov_audit" -> oOovAudit)
+  /** Every query, in q-number order (which is also Bench's timing order). */
+  lazy val registry: Seq[Q] = Seq(
+    Q("q01_text_metrics", qTextMetrics, oTextMetrics, bench = false),
+    Q("q02_parse_number", qParseNumber, pnumMacro + ";\n" + oParseNumber, bench = true),
+    Q("q03_line_explode", qLineExplode, oLineExplode, bench = false),
+    Q("q04_line_filters", qLineFilters, oLineFilters, bench = false),
+    Q("q05_regex_extract", qRegexExtract, oRegexExtract, bench = true),
+    Q("q06_dedup_firstwins", qDedupFirstWins, oDedupFirstWins, bench = true),
+    Q("q07_group_stats", qGroupStats, oGroupStats, bench = true),
+    Q("q08_best_argmax", qBestArgmax, oBestArgmax, bench = false),
+    Q("q09_doctype_scores", qDoctypeScores, oDoctypeScores, bench = false),
+    Q("q10_topk", qTopK, oTopK, bench = true),
+    Q("q11_fuzzy_topk", qFuzzyTopK, oFuzzyTopK, bench = true),
+    Q("q12_dedup_exact", qDedupExact, oDedupExact, bench = true),
+    Q("q13_ngram_jaccard", qNgramJaccard, oNgramJaccardFull, bench = false),
+    Q("q14_lang_id", qLangId, oLangId, bench = false),
+    Q("q15_token_counts", qTokenCounts, oTokenCounts, bench = true),
+    Q("q16_fingerprint", qFingerprint, oFingerprint, bench = false),
+    Q("q17_sessionize", qSessionize, oSessionize, bench = true),
+    Q("q18_extract_turns", qExtractTurns, goldenOracleSql("q18_extract_turns"), bench = true),
+    Q("q19_extract_items", qExtractItems, goldenOracleSql("q19_extract_items"), bench = true),
+    Q("q20_wratio_match", qWratioMatch, goldenOracleSql("q20_wratio_match"), bench = false),
+    Q("q21_minhash_candidates", qMinhashCandidates,
+      minhashCandSql(k = 3, bands = 8, rowsPerBand = 4, maxBucket = 10000), bench = true),
+    Q("q22_simhash_candidates", qSimhashCandidates,
+      simhashCandSql(maxHamming = 3, maxBucket = 10000), bench = true),
+    Q("q23_embed_neardup", qEmbedNearDup, oEmbedNearDup, bench = false),
+    Q("q24_ann_topk", qAnnTopK, oAnnTopK, bench = true),
+    Q("q25_ann_lsh", qAnnLsh,
+      lshPairsSql(nPlanes = 6, dim = 64, threshold = 0.3, maxBucket = 10000), bench = true),
+    Q("q26_multimodal_meta", qMultimodalMeta, oMultimodalMeta, bench = true),
+    Q("q27_join_agg", qJoinAgg, oJoinAgg, bench = false),
+    Q("q28_rollup", qRollup, oRollup, bench = false),
+    Q("q29_running_sum", qRunningSum, oRunningSum, bench = false),
+    Q("q30_ann_ivf", qAnnIvf,
+      ivfSql(k = 16, nProbe = 4, topK = 5, nQueries = 10, trainN = 4096), bench = true),
+    Q("q31_dedup_clusters", qDedupClusters, oDedupClusters, bench = false),
+    Q("q32_quality_score", qQuality, oQuality, bench = false),
+    Q("q33_det_sample", qSample, oSample, bench = false),
+    Q("q34_lsh_dedup", qLshDedup, oLshDedup, bench = true),
+    Q("q35_distinctive_terms", qDistinctiveTerms, oDistinctiveTerms, bench = true),
+    Q("q36_pii_scrub", qPiiScrub, oPiiScrub, bench = false),
+    Q("q37_contamination", qContamination, oContamination, bench = true),
+    Q("q38_boilerplate", qBoilerplate, oBoilerplate, bench = true),
+    Q("q39_asof_join", qAsofJoin, oAsofJoin, bench = true),
+    Q("q40_range_join", qRangeJoin, oRangeJoin, bench = true),
+    Q("q41_blocked_match", qBlockedMatch, oBlockedMatch, bench = true),
+    Q("q42_asof_salted", qAsofSalted, oAsofSaltedHot, bench = false),
+    Q("q43_repetition", qRepetition, oRepetition, bench = true),
+    Q("q44_corpus_filter", qCorpusFilter, oCorpusFilter, bench = true),
+    Q("q45_stratified_sample", qStratifiedSample, oStratifiedSample, bench = true),
+    Q("q46_pack_sequences", qPackSequences, oPackSequences, bench = true),
+    Q("q47_quantize_int8", qQuantize, oQuantize, bench = true),
+    Q("q48_source_filter", qSourceFilter, oSourceFilter, bench = true),
+    Q("q49_session_window", qSessionWindow, oSessionWindow, bench = true),
+    Q("q50_contamination_bloom", qContaminationBloom, oContamination, bench = true),
+    Q("q51_dup_spans", qDupSpans, oDupSpans, bench = true),
+    Q("q52_cluster_best", qClusterBest, oClusterBest, bench = true),
+    Q("q53_lexical_commonness", qLexicalCommonness, oLexicalCommonness, bench = true),
+    Q("q54_vocab_topk", qVocabTopK, oVocabTopK, bench = true),
+    Q("q55_source_mix", qSourceMix, oSourceMix, bench = true),
+    Q("q56_semdedup_pairs", qSemDedup, oSemDedup, bench = true),
+    Q("q57_corpus_chain", qCorpusChain, oCorpusChain, bench = true),
+    Q("q58_incremental_dedup", qIncrementalDedup, oLshDedup, bench = true),
+    Q("q59_semdedup_keep", qSemDedupKeep, oSemDedupKeep, bench = true),
+    Q("q60_semdedup_incremental", qSemDedupIncr, oSemDedupIncr, bench = true),
+    Q("q61_remove_dup_spans", qRemoveDupSpans, oRemoveDupSpans, bench = true),
+    Q("q62_bpe_pairs", qBpePairs, oBpePairs, bench = true),
+    Q("q63_pack_whole", qPackWhole, oPackWhole, bench = true),
+    Q("q64_strip_boiler_turns", qStripBoilerTurns, oStripBoilerTurns, bench = true),
+    Q("q65_length_profile", qLengthProfile, oLengthProfile, bench = true),
+    Q("q66_conv_integrity", qConvIntegrity, oConvIntegrity, bench = true),
+    Q("q67_global_shuffle", qGlobalShuffle, oGlobalShuffle, bench = true),
+    Q("q68_hash_classifier", qHashClassifier, oHashClassifier, bench = true),
+    Q("q69_truncate_context", qTruncateContext, oTruncateContext, bench = true),
+    Q("q70_chunk_docs", qChunkDocs, oChunkDocs, bench = true),
+    Q("q71_conv_dedup", qConvDedup, oConvDedup, bench = true),
+    Q("q72_agent_loops", qAgentLoops, oAgentLoops, bench = true),
+    Q("q73_repair_order", qRepairOrder, oRepairOrder, bench = true),
+    Q("q74_preference_pairs", qPreferencePairs, oPreferencePairs, bench = true),
+    Q("q75_temperature_sample", qTemperatureSample, oTemperatureSample, bench = true),
+    Q("q76_dup_flow_matrix", qDupFlowMatrix, oDupFlowMatrix, bench = true),
+    Q("q77_curriculum", qCurriculum, oCurriculum, bench = true),
+    Q("q78_transcript_chain", qTranscriptChain, oTranscriptChain, bench = true),
+    Q("q79_kmv_sketch", qKmvSketch, oKmvSketch, bench = true),
+    Q("q80_tool_transitions", qToolTransitions, oToolTransitions, bench = true),
+    Q("q81_bottomk_sample", qBottomKSample, oBottomKSample, bench = true),
+    Q("q82_centroid_sim", qCentroidSim, oCentroidSim, bench = true),
+    Q("q83_epoch_repeats", qEpochRepeats, oEpochRepeats, bench = true),
+    Q("q84_bottomk_per_group", qBottomKPerGroup, oBottomKPerGroup, bench = true),
+    Q("q85_oov_audit", qOovAudit, oOovAudit, bench = true))
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.plan).toMap
+
+  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracle).toMap
+
+  def benchQueries: Seq[String] = registry.filter(_.bench).map(_.name)
 
   /** n-gram jaccard oracle: shingles built identically (token 3-grams over
     * lowercase alnum tokens, distinct). */

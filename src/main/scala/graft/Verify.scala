@@ -1,21 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Correctness dump: each SparkEntry.queries result → parquet, plus
+/** Correctness dump: each SparkEntry.registry query's result → parquet, plus
   * oracle_sql.json, for a DuckDB oracle compare. A query that
   * fails does not stop the others; the artifacts are still written, and
   * the run then lists the failed queries and exits with status 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // cap-drop observability: every KeyCaps/maxBucket guard reports how
     // many keys/rows its cap removed (CapMetrics scaladoc) — dumped per
@@ -23,10 +15,11 @@ object Verify {
     val caps = graft.skew.CapMetrics.register(spark)
     val capsByQuery = scala.collection.mutable.LinkedHashMap[String, String]()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.registry.foreach { q =>
+      val name = q.name
       caps.clear()
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        q.plan(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
         val snap = caps.snapshot()
@@ -56,7 +49,7 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
     if (failed.nonEmpty) {
-      System.err.println(s"[verify] ${failed.size} of ${SparkEntry.queries.size} queries " +
+      System.err.println(s"[verify] ${failed.size} of ${SparkEntry.registry.size} queries " +
         s"failed: ${failed.mkString(", ")}")
       sys.exit(1)
     }

@@ -29,20 +29,10 @@ object Similarity {
     * expression ([[graft.expr.CosineSim]]) computing the exact ordered
     * fold the SQL oracle replicates (products summed left-to-right from
     * 0.0, sqrt of the ordered square sums, dot/(na*nb)). The previous
-    * HOF formulation ([[cosineHof]], kept as the differential reference)
-    * computed the same values but interpreted, with one lambda dispatch
-    * per element and 4 array passes per pair. */
+    * HOF formulation (graft.ref.SimilarityRef in the tests, the
+    * differential reference) computed the same values but interpreted,
+    * with one lambda dispatch per element and 4 array passes per pair. */
   def cosine(a: Column, b: Column): Column = graft.expr.vecops.cosine_sim(a, b)
-
-  /** The declarative (pure-HOF) cosine — identical math to [[cosine]];
-    * kept as the differential reference for SparkSpec's
-    * expression-equivalence test. */
-  private[graft] def cosineHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
-    val na = sqrt(aggregate(transform(a, x => x * x), lit(0.0), _ + _))
-    val nb = sqrt(aggregate(transform(b, x => x * x), lit(0.0), _ + _))
-    dot / (na * nb)
-  }
 
   /** Two-level per-key top-k: candidates are first reduced to k within
     * (key, salt) buckets — parallel across saltBuckets tasks — then the
@@ -92,18 +82,10 @@ object Similarity {
     * ([[graft.expr.SignLshBucket]]); the hyperplanes ride in the
     * expression's references array instead of nPlanes x dim array
     * literals in the plan. Same per-plane ordered-fold dot and `>= 0`
-    * sign as the HOF formulation ([[lshBucketHof]], the differential
-    * reference). */
+    * sign as the HOF formulation (graft.ref.SimilarityRef, the
+    * differential reference). */
   def lshBucket(vecCol: Column, weights: Array[Array[Double]]): Column =
     graft.expr.vecops.sign_bucket(vecCol, weights)
-
-  /** The declarative (pure-HOF) bucket id — differential reference. */
-  private[graft] def lshBucketHof(vecCol: Column, weights: Array[Array[Double]]): Column =
-    weights.zipWithIndex.map { case (w, p) =>
-      val wLit = array(w.map(lit(_)): _*)
-      val dot = aggregate(zip_with(vecCol, wLit, (x, y) => x * y), lit(0.0), _ + _)
-      when(dot >= 0, lit(1L << p)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
 
   /** LSH-bucketed near-neighbor pairs: cosine computed only within buckets.
     * `maxBucket` is the explicit skew guard its MinHash/SimHash siblings
@@ -157,19 +139,10 @@ object Similarity {
     * ([[graft.expr.NearestCentroid]]) computing the exact fold the SQL
     * oracle replicates with list_reduce (init cos=-2.0/cid=-1, strict
     * SQL-ordering `>`), with the stream vector's norm computed once
-    * instead of once per centroid. [[nearestCidHof]] is the differential
-    * reference. */
+    * instead of once per centroid. graft.ref.SimilarityRef holds the
+    * HOF formulation, the differential reference. */
   private def nearestCid(vecCol: Column, clCol: Column): Column =
     graft.expr.vecops.nearest_cid(vecCol, clCol)
-
-  /** The declarative (pure-HOF) argmax — differential reference. */
-  private[graft] def nearestCidHof(vecCol: Column, clCol: Column): Column = {
-    val scored = transform(clCol,
-      ct => struct(cosineHof(vecCol, ct.getField("c")).as("cos"), ct.getField("cid").as("cid")))
-    aggregate(scored, struct(lit(-2.0).as("cos"), lit(-1L).as("cid")),
-      (acc, s) => when(s.getField("cos") > acc.getField("cos"), s).otherwise(acc))
-      .getField("cid")
-  }
 
   /** Map-side centroid assignment: cross-join the ONE-row broadcast
     * centroid array onto the stream side and fold — a

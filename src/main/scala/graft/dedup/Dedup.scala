@@ -91,36 +91,18 @@ object Dedup {
 
   /** Lowercase alnum tokens — native single-pass expression
     * (graft.expr.TokensExpr; `lower` stays a Catalyst child). The HOF
-    * formulation ([[tokensHof]], the differential reference) recompiled
-    * the split regex and ran the empty-filter lambda interpreted per row.
+    * formulation (graft.ref.DedupRef in the tests, the differential
+    * reference) recompiled the split regex and ran the empty-filter
+    * lambda interpreted per row.
     */
   def tokens(textCol: Column): Column = graft.expr.textops.tokens_of(textCol)
-
-  /** The declarative (pure-HOF) tokenizer — differential reference. */
-  private[graft] def tokensHof(textCol: Column): Column =
-    filter(split(lower(textCol), "[^a-z0-9]+"), x => x =!= "")
 
   /** Word k-shingles as strings ("a b c"); fewer than k tokens -> empty.
     * Native single-pass expression (graft.expr.ShinglesExpr): same
     * String.split token stream, same space-joined grams, same
-    * first-occurrence array_distinct order as [[shinglesHof]]. */
+    * first-occurrence array_distinct order as the HOF shingler. */
   def shingles(textCol: Column, k: Int): Column =
     graft.expr.textops.shingles_of(textCol, k)
-
-  /** The declarative (pure-HOF) shingler — differential reference.
-    *
-    * Built with arrays_zip over k shifted slices, NOT transform over an
-    * index sequence: a lambda body re-evaluates every non-lambda
-    * subexpression per element, which would make shingling O(tokens^2);
-    * zip arguments are evaluated once. */
-  private[graft] def shinglesHof(textCol: Column, k: Int): Column = {
-    val toks = tokensHof(textCol)
-    val n = size(toks)
-    val zipped = arrays_zip((0 until k).map(j => slice(toks, lit(j + 1), n - (k - 1))): _*)
-    val joined = transform(zipped,
-      s => concat_ws(" ", (0 until k).map(j => s.getField(j.toString)): _*))
-    array_distinct(when(n >= k, joined).otherwise(array().cast("array<string>")))
-  }
 
   /** Portable 60-bit hash of a string: first 15 hex chars of md5, parsed as
     * an integer — bit-identical in any engine with md5 (DuckDB:
@@ -259,18 +241,6 @@ object Dedup {
       .select(col(idCol),
         graft.expr.signatures.minhash_sig(shingles(col(textCol), k), numHashes).as("sig"))
 
-  /** The declarative (pure-HOF) formulation of the signature — identical
-    * math to the native expression; kept as the differential reference for
-    * SparkSpec's expression-equivalence test. */
-  private[graft] def minhashSigHof(textCol: Column, k: Int, numHashes: Int): Column = {
-    val paramsLit = array(hashParams(numHashes).map { case (a, c) =>
-      struct(lit(a).as("a"), lit(c).as("c")) }: _*)
-    val base = transform(shingles(textCol, k), s => pmod(md5Hash60(s), lit(P)))
-    aggregate(base, array_repeat(lit(P), numHashes),
-      (acc, h) => zip_with(acc, paramsLit,
-        (m, pr) => least(m, pmod(pr.getField("a") * h + pr.getField("c"), lit(P)))))
-  }
-
   /** Per-band bucket keys: md5 of the band's comma-joined signature rows. */
   def minhashBuckets(sigCol: Column, bands: Int, rowsPerBand: Int): Column =
     array((0 until bands).map { b =>
@@ -309,13 +279,6 @@ object Dedup {
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
   }
-
-  /** Declarative (pure-HOF) pair emission — differential reference for
-    * PairOpsSpec. */
-  private[graft] def pairsHof(ids: Column): Column =
-    flatten(transform(ids, (x, i) =>
-      transform(slice(ids, i + lit(2), size(ids) - i - 1),
-        y => struct(x.as("id_a"), y.as("id_b")))))
 
   /**
    * MinHash-LSH candidate pairs: band the signature (`bands` x
@@ -650,16 +613,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Declarative (pure-HOF) new-only pair emission — differential
-    * reference for PairOpsSpec. */
-  private[graft] def pairsNewOnlyHof(ms: Column): Column =
-    flatten(transform(ms, (x, i) =>
-      filter(
-        transform(slice(ms, i + lit(2), size(ms) - i - 1),
-          y => struct(x.getField("id").as("id_a"), y.getField("id").as("id_b"),
-            (x.getField("is_new") || y.getField("is_new")).as("any_new"))),
-        p => p.getField("any_new"))))
-
   /**
    * Representative selection for near-dup clusters: a real dedup keeps the
    * BEST copy of each duplicate family (here: highest `scoreCol`, tie ->
@@ -709,27 +662,6 @@ object Dedup {
     df.select(col(idCol),
       graft.expr.signatures.simhash_blocks(tokens(col(textCol))).as("blocks"))
 
-  /** Declarative (pure-HOF) blocks formulation — identical math to the
-    * native expression; kept for SparkSpec's equivalence test. One fold
-    * carrying all 64 bit-sums, thresholded in the finish lambda. */
-  private[graft] def simhashBlocksHof(textCol: Column): Column = {
-    val th = transform(tokens(textCol), t => struct(
-      conv(substring(md5(t), 1, 8), 16, 10).cast("long").as("hi"),
-      conv(substring(md5(t), 9, 8), 16, 10).cast("long").as("lo")))
-    // per-bit descriptor: which half holds global bit g, and its mask
-    val bitsLit = array((0 until 64).map { g =>
-      struct(lit(g < 32).as("lo"), lit(1L << (g % 32)).as("mask"))
-    }: _*)
-    val masks16 = array((0 until 16).map(j => lit(1L << j)): _*)
-    aggregate(th, array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitsLit, (a, pr) =>
-        a + when(when(pr.getField("lo"), h.getField("lo")).otherwise(h.getField("hi"))
-          .bitwiseAND(pr.getField("mask")) =!= 0L, 1L).otherwise(-1L)),
-      acc => transform(sequence(lit(0), lit(3)), b =>
-        aggregate(zip_with(slice(acc, b * 16 + lit(1), lit(16)), masks16,
-          (s, m) => when(s > 0, m).otherwise(lit(0L))), lit(0L), _ + _)))
-  }
-
   /** Hamming-near pairs via the 4x16-bit block pigeonhole (any pair within
     * hamming distance 3 shares at least one exact block). Same
     * group-by-bucket single-shuffle pairing as MinHash. */
@@ -751,16 +683,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .distinct()
   }
-
-  /** Declarative (pure-HOF) hamming pair emission — differential
-    * reference for PairOpsSpec. */
-  private[graft] def hammingPairsHof(ms: Column): Column =
-    flatten(transform(ms, (x, i) =>
-      transform(slice(ms, i + lit(2), size(ms) - i - 1),
-        y => struct(x.getField("id").as("id_a"), y.getField("id").as("id_b"),
-          aggregate(zip_with(x.getField("blocks"), y.getField("blocks"),
-            (p, q) => bit_count(p.bitwiseXOR(q)).cast("long")), lit(0L), _ + _)
-            .as("hamming")))))
 
   /** Embedding cosine near-duplicates over a bounded id range (brute-force
     * verify shape; the scale path buckets by hyperplane LSH first —

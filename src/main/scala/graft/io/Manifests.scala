@@ -2,7 +2,10 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 
 /**
  * Chunked, manifest-committed, exactly-resumable extraction runs
@@ -26,37 +29,49 @@ object Manifests {
                                  input: String, predicate: String,
                                  files: Seq[(String, Long)] = Nil)
 
-  private def manifestPath(outDir: String, k: Int): Path =
-    Paths.get(outDir, "manifest", f"chunk-$k%05d.json")
+  private val json = new ObjectMapper()
 
-  def isCommitted(outDir: String, k: Int): Boolean = Files.exists(manifestPath(outDir, k))
+  private def chunkFile(k: Int): String = f"chunk-$k%05d.json"
 
-  private def commit(outDir: String, m: ChunkManifest): Unit = {
-    val dir = Paths.get(outDir, "manifest")
-    Files.createDirectories(dir)
-    val filesJson = m.files
-      .map { case (name, sz) => s"""{"file":"$name","bytes":$sz}""" }
-      .mkString("[", ",", "]")
-    val json =
-      s"""{"chunk":${m.chunk},"rows":${m.rows},"bytes":${m.bytes},"checksum":${m.checksum},""" +
-      s""""input":"${m.input}","predicate":"${m.predicate}","partition_files":$filesJson}"""
-    val tmp = dir.resolve(f".chunk-${m.chunk}%05d.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, manifestPath(outDir, m.chunk), StandardCopyOption.ATOMIC_MOVE)
+  def isCommitted(outDir: String, k: Int): Boolean =
+    Files.exists(Paths.get(outDir, "manifest", chunkFile(k)))
+
+  /** Write `manifest/<name>` atomically (tmp + rename). */
+  private def writeAtomic(outDir: String, name: String, node: ObjectNode): Unit = {
+    val dir = Files.createDirectories(Paths.get(outDir, "manifest"))
+    val tmp = dir.resolve(s".$name.tmp")
+    Files.writeString(tmp, json.writeValueAsString(node))
+    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  def readManifests(outDir: String): Seq[ChunkManifest] = {
+  /** Every `manifest/<kind>-<n>.json`, parsed, in file-name order. */
+  private def readAll[A](outDir: String, kind: String)(parse: JsonNode => A): Seq[A] = {
     val dir = Paths.get(outDir, "manifest")
     if (!Files.exists(dir)) return Nil
-    import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("chunk-\\d+\\.json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val s = Files.readString(p)
-        def num(k: String): Long = s.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
-        ChunkManifest(num("chunk").toInt, num("rows"), num("bytes"), num("checksum"), "", "")
-      }
+    val files = Files.list(dir)
+    try files.iterator().asScala
+      .filter(_.getFileName.toString.matches(kind + "-\\d+\\.json")).toSeq.sortBy(_.toString)
+      .map(p => parse(json.readTree(p.toFile)))
+    finally files.close()
   }
+
+  private def commit(outDir: String, m: ChunkManifest): Unit = {
+    val node = json.createObjectNode()
+      .put("chunk", m.chunk).put("rows", m.rows).put("bytes", m.bytes)
+      .put("checksum", m.checksum).put("input", m.input).put("predicate", m.predicate)
+    val files = node.putArray("partition_files")
+    m.files.foreach { case (name, sz) => files.addObject().put("file", name).put("bytes", sz) }
+    writeAtomic(outDir, chunkFile(m.chunk), node)
+  }
+
+  def readManifests(outDir: String): Seq[ChunkManifest] =
+    readAll(outDir, "chunk") { n =>
+      ChunkManifest(n.required("chunk").asInt, n.required("rows").asLong,
+        n.required("bytes").asLong, n.required("checksum").asLong,
+        n.required("input").asText, n.required("predicate").asText,
+        n.required("partition_files").asScala.toSeq
+          .map(f => f.required("file").asText -> f.required("bytes").asLong))
+    }
 
   /**
    * Consistent read of a [[resumableExtract]] output — the Iceberg reader
@@ -92,9 +107,6 @@ object Manifests {
 
   final case class Snapshot(version: Int, chunks: Seq[Int], rows: Long, bytes: Long)
 
-  private def snapshotPath(outDir: String, v: Int): Path =
-    Paths.get(outDir, "manifest", f"snapshot-$v%05d.json")
-
   /**
    * Freeze the CURRENT committed chunk set as the next snapshot version
    * (atomic tmp+rename, like chunk commits). Chunks committed after this
@@ -108,31 +120,19 @@ object Manifests {
     require(ms.nonEmpty, s"nothing committed under $outDir to snapshot")
     val v = snapshots(outDir).lastOption.map(_.version + 1).getOrElse(1)
     val s = Snapshot(v, ms.map(_.chunk), ms.map(_.rows).sum, ms.map(_.bytes).sum)
-    val dir = Paths.get(outDir, "manifest")
-    val json = s"""{"version":${s.version},"chunks":${s.chunks.mkString("[", ",", "]")},""" +
-      s""""rows":${s.rows},"bytes":${s.bytes}}"""
-    val tmp = dir.resolve(f".snapshot-$v%05d.json.tmp")
-    Files.writeString(tmp, json)
-    Files.move(tmp, snapshotPath(outDir, v), StandardCopyOption.ATOMIC_MOVE)
+    val node = json.createObjectNode().put("version", s.version)
+    val chunks = node.putArray("chunks")
+    s.chunks.foreach(k => chunks.add(k))
+    writeAtomic(outDir, f"snapshot-$v%05d.json", node.put("rows", s.rows).put("bytes", s.bytes))
     s
   }
 
   /** All snapshot versions, oldest first. */
-  def snapshots(outDir: String): Seq[Snapshot] = {
-    val dir = Paths.get(outDir, "manifest")
-    if (!Files.exists(dir)) return Nil
-    import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("snapshot-\\d+\\.json")).toSeq.sortBy(_.toString)
-      .map { p =>
-        val s = Files.readString(p)
-        def num(k: String): Long = s.split("\"" + k + "\":")(1).takeWhile(c => c.isDigit || c == '-').toLong
-        val chunks = s.split("\"chunks\":\\[")(1).takeWhile(_ != ']')
-        Snapshot(num("version").toInt,
-          if (chunks.isEmpty) Nil else chunks.split(',').toSeq.map(_.trim.toInt),
-          num("rows"), num("bytes"))
-      }
-  }
+  def snapshots(outDir: String): Seq[Snapshot] =
+    readAll(outDir, "snapshot") { n =>
+      Snapshot(n.required("version").asInt, n.required("chunks").asScala.toSeq.map(_.asInt),
+        n.required("rows").asLong, n.required("bytes").asLong)
+    }
 
   /**
    * Time-travel read: exactly the chunk set frozen by snapshot `version`,

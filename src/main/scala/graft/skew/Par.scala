@@ -1,6 +1,8 @@
 package graft.skew
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /**
  * Scale-adaptive parallelism floor for COMPUTE-DENSE map stages
@@ -33,12 +35,19 @@ import org.apache.spark.sql.DataFrame
  * only the map-only site keeps the floor.
  *
  * Safety: `df.rdd.getNumPartitions` is job-free only when the plan has
- * no un-materialized shuffle below it (with AQE, partition resolution
- * of a shuffly plan would EXECUTE its stages). Callers therefore apply
- * this to raw scans or localCheckpoint'ed tables only.
+ * no un-materialized exchange below it (with AQE, partition resolution
+ * of a shuffly plan would EXECUTE its stages; a broadcast runs its build
+ * side). `floor` therefore requires a plan without one — a raw scan or a
+ * localCheckpoint'ed table — and checks it on the physical plan, which
+ * planning alone produces.
  */
 object Par {
+  private val plans = new AdaptiveSparkPlanHelper {}
+
   def floor(df: DataFrame): DataFrame = {
+    require(plans.find(df.queryExecution.executedPlan)(_.isInstanceOf[Exchange]).isEmpty,
+      "Par.floor needs a plan without an exchange (a raw scan or a localCheckpoint'ed table): " +
+        "resolving its partition count would run the exchange's stages")
     val cores = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < cores) df.repartition(cores) else df
   }

@@ -283,14 +283,6 @@ object TextAnalysis {
   private def alnumTokens(t: Column): Column =
     graft.expr.textops.tokens_of(t)
 
-  /** Non-distinct word 2-grams ("a b"): the repetition unit. */
-  private def word2grams(toks: Column): Column = {
-    val n = size(toks)
-    val zipped = arrays_zip(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1))
-    when(n >= 2, transform(zipped, s => concat_ws(" ", s.getField("0"), s.getField("1"))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /**
    * Gopher-style repetition filters per document: the most-frequent-word
    * fraction and the duplicate-2-gram fraction — the standard signals for
@@ -303,28 +295,12 @@ object TextAnalysis {
     * [[repetitionStats]] and [[corpusFilter]]; native one-pass
     * expressions (graft.expr.TopRunCount / TwoGramCounts — the former
     * interpreted struct-accumulator fold allocated one struct per token;
-    * [[repetitionPiecesHof]] is the differential reference). */
+    * graft.ref.TextAnalysisRef is the differential reference). */
   private[graft] def repetitionPieces(t: Column): (Column, Column, Column, Column) = {
     val toks = alnumTokens(t)
     val tg = graft.expr.textops.two_gram_counts(toks)
     (toks, graft.expr.textops.top_run_count(toks),
       tg.getField("n2"), tg.getField("ndup"))
-  }
-
-  /** The declarative (pure-HOF) formulation — differential reference. */
-  private[graft] def repetitionPiecesHof(t: Column): (Column, Column, Column, Column) = {
-    val toks = filter(split(lower(t), "[^a-z0-9]+"), x => x =!= "")
-    val sorted = sort_array(toks)
-    val zero = struct(lit(null).cast("string").as("prev"),
-      lit(0L).as("run"), lit(0L).as("best"))
-    val topCount = aggregate(sorted, zero, (acc, tok) => {
-      val newRun = when(tok === acc.getField("prev"), acc.getField("run") + 1L).otherwise(lit(1L))
-      struct(tok.as("prev"), newRun.as("run"),
-        greatest(acc.getField("best"), newRun).as("best"))
-    }).getField("best")
-    val grams = word2grams(toks)
-    (toks, topCount, size(grams).cast("long"),
-      (size(grams) - size(array_distinct(grams))).cast("long"))
   }
 
   def repetitionStats(df: DataFrame, idCol: String, textCol: String,
@@ -435,26 +411,10 @@ object TextAnalysis {
     // native one-digest-per-token fold (graft.expr.ClassifierScore) —
     // the former `aggregate` HOF ran every lambda interpreted and built
     // the "w:" concat, the md5 HEX string and a conv() parse per token;
-    // [[hashClassifierScoreHof]] is the differential reference
+    // graft.ref.TextAnalysisRef is the differential reference
     val cs = graft.expr.textops.classifier_score(alnumTokens(col(textCol)), nBuckets.toLong)
     df.select(col(idCol), cs.getField("n_tokens").as("n_tokens"),
         cs.getField("score_int").as("score_int"))
-      .withColumn("keep", col("score_int") > 0L)
-  }
-
-  /** The declarative (pure-HOF) formulation — differential reference for
-    * TextOpsSpec. */
-  private[graft] def hashClassifierScoreHof(df: DataFrame, idCol: String, textCol: String,
-                                            nBuckets: Int): DataFrame = {
-    val toks = alnumTokens(col(textCol))
-    val bucket = (t: Column) =>
-      pmod(conv(substring(md5(concat(lit("w:"), t)), 1, 15), 16, 10).cast("long"),
-        lit(nBuckets.toLong))
-    // weight(b) in [-4095, 4095]: Knuth-multiplicative spread of the bucket id
-    val weight = (t: Column) => pmod(bucket(t) * lit(2654435761L), lit(8191L)) - lit(4095L)
-    df.select(col(idCol),
-        size(toks).cast("long").as("n_tokens"),
-        aggregate(toks, lit(0L), (acc, t) => acc + weight(t)).as("score_int"))
       .withColumn("keep", col("score_int") > 0L)
   }
 

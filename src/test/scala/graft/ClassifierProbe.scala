@@ -1,15 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev probe: same-JVM A/B of the native vs HOF classifier fold (q68). */
 object ClassifierProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(32)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def time(label: String)(f: => Unit): Unit = {
       val t0 = System.nanoTime(); f
@@ -21,7 +16,7 @@ object ClassifierProbe {
           .write.format("noop").mode("overwrite").save()
       }
       time(s"hof    run$i") {
-        graft.text.TextAnalysis.hashClassifierScoreHof(docs, "doc_id", "text", 1 << 20)
+        graft.ref.TextAnalysisRef.hashClassifierScore(docs, "doc_id", "text", 1 << 20)
           .write.format("noop").mode("overwrite").save()
       }
     }

@@ -111,8 +111,7 @@ object HotPathSample {
 /** Print formatted plans for ad-hoc audit. Usage: Test/runMain graft.PlanPeek q35_distinctive_terms ... */
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { q =>
       println(s"===== $q =====")

@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Dev probe: repeated q30 timing with GC/JIT counters to locate the bimodal cost. */
 object IvfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(32)
     val fn = SparkEntry.queries("q30_ann_ivf")
     def gcMs: Long = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum

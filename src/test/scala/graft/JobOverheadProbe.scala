@@ -1,17 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: per-action latency floor of the warm session — how much of
   * the bench is irreducible driver orchestration. */
 object JobOverheadProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(32)
     def t(label: String, reps: Int)(f: => Unit): Unit = {
       f // warm
       val t0 = System.nanoTime()

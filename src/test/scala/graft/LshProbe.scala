@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe: per-stage timing of the q34 LSH dedup chain. */
 object LshProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(32)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -33,7 +33,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(longLists, strLists)) {
       val rows = df.select(
         graft.expr.pairops.pair_emit(col("ids")).as("nat"),
-        graft.dedup.Dedup.pairsHof(col("ids")).as("hof")).collect()
+        graft.ref.DedupRef.pairs(col("ids")).as("hof")).collect()
       rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit mismatch: ${r.get(0)} vs ${r.get(1)}"))
     }
   }
@@ -49,7 +49,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         struct(x.getField("_1").as("id"), x.getField("_2").as("is_new"))).as("ms"))
     val rows = df.select(
       graft.expr.pairops.pair_emit_new_only(col("ms")).as("nat"),
-      graft.dedup.Dedup.pairsNewOnlyHof(col("ms")).as("hof")).collect()
+      graft.ref.DedupRef.pairsNewOnly(col("ms")).as("hof")).collect()
     // HOF emits (id_a, id_b, any_new); native emits (id_a, id_b) — compare projected
     rows.foreach { r =>
       val nat = r.getSeq[org.apache.spark.sql.Row](0).map(x => (x.get(0), x.get(1)))
@@ -67,7 +67,7 @@ class PairOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .agg(sort_array(collect_list(struct(col("id"), col("blocks")))).as("ms"))
     val rows = grouped.select(
       graft.expr.pairops.pair_emit_hamming(col("ms")).as("nat"),
-      graft.dedup.Dedup.hammingPairsHof(col("ms")).as("hof")).collect()
+      graft.ref.DedupRef.hammingPairs(col("ms")).as("hof")).collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.get(0) == r.get(1), s"pair_emit_hamming mismatch"))
   }

@@ -1,18 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (r06): dump explain("formatted") for bench queries to
   * plans/r06/<name>_<suffix>.txt. Usage: PlanDumpR06 <suffix> [names...] */
 object PlanDumpR06 {
   def main(args: Array[String]): Unit = {
     val suffix = args.headOption.getOrElse("after")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
+    val spark = SparkEntry.session(32)
+    val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.registry.map(_.name)
     val outDir = new java.io.File("plans/r06")
     outDir.mkdirs()
     names.foreach { name =>

@@ -1,13 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: formatted physical plans of the key pipelines,
   * the evidence that pruning/pushdown/codegen/map-only claims hold. */
 object PlansDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4").config("spark.ui.enabled","false").getOrCreate()
+    val spark = SparkEntry.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
     val sb = new StringBuilder

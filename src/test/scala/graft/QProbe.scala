@@ -1,16 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
-/** Dev probe: per-job wall time + call sites of any declared query. */
+/** Dev probe: per-run wall time, then per-job wall time + call sites, of
+  * the named queries (default: every query Bench times).
+  * Usage: Test/runMain graft.QProbe [q...] */
 object QProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(32)
     case class J(var start: Long = 0L, var end: Long = 0L, var cs: String = "",
                  var stages: Int = 0, var tasks: Int = 0)
     val jm = new java.util.concurrent.ConcurrentHashMap[Int, J]()
@@ -25,7 +23,8 @@ object QProbe {
         Option(jm.get(je.jobId)).foreach(_.end = je.time)
       }
     })
-    args.foreach { name =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.benchQueries
+    names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to 3).foreach { i =>
         jm.clear()

@@ -102,13 +102,76 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(total == 300L)
   }
 
-  test("driver contract: every query has an oracle and vice versa") {
-    // a queries entry without an oracleSql entry silently downgrades to a
-    // rows-only check in the driver; an orphan oracle is dead SQL
-    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet,
-      s"mismatch: ${(SparkEntry.queries.keySet diff SparkEntry.oracleSql.keySet) ++
-        (SparkEntry.oracleSql.keySet diff SparkEntry.queries.keySet)}")
-    assert(SparkEntry.queries.size >= 52)
+  test("manifest JSON escapes its strings and round-trips every field") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-manifest-json").toString
+    val turns = graft.io.Transcripts.generateDF(spark, 100L)
+    val desc = "a \"b\" \\ c\n\"rows\":7"
+    def run(): Int = graft.io.Manifests.resumableExtract(spark, turns, dir,
+      nChunks = 2, numPartitions = 2, salt = 1, inputDesc = desc)
+    assert(run() == 2)
+    val ms = graft.io.Manifests.readManifests(dir)
+    assert(ms.map(_.chunk) == Seq(0, 1) && ms.map(_.rows).sum == 100L)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    ms.foreach { m =>
+      val n = mapper.readTree(new java.io.File(f"$dir/manifest/chunk-${m.chunk}%05d.json"))
+      assert(n.get("rows").asLong == m.rows && n.get("bytes").asLong == m.bytes &&
+        n.get("checksum").asLong == m.checksum)
+      assert(m.input == desc && n.get("input").asText == desc)
+      assert(m.predicate == s"pmod(xxhash64(conv_id), 2) = ${m.chunk}")
+      val parts = new java.io.File(s"$dir/chunk=${m.chunk}").listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName).map(p => p.getName -> p.length())
+      assert(m.files.nonEmpty && m.files == parts.toSeq)
+    }
+    assert(graft.io.Manifests.readCommitted(spark, dir, verify = true).count() == 100L)
+    val snap = graft.io.Manifests.snapshot(dir)
+    assert(graft.io.Manifests.snapshots(dir) == Seq(snap) && snap.chunks == Seq(0, 1))
+    assert(run() == 0)
+  }
+
+  test("Par.floor rejects a plan with an exchange, before any job runs") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-par").toString
+    Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
+      .write.parquet(s"$dir/documents.parquet")
+    val shuffled = spark.read.parquet(s"$dir/documents.parquet").groupBy("text").count()
+    def lastJob: Option[Int] = {
+      org.apache.spark.sql.graftbridge.Bridge.waitListenerBus(spark)
+      spark.sparkContext.statusTracker.getJobIdsForGroup(null).maxOption
+    }
+    val before = lastJob
+    intercept[IllegalArgumentException](graft.skew.Par.floor(shuffled))
+    assert(lastJob == before)
+    // q68 floors its raw documents scan
+    assert(SparkEntry.queries("q68_hash_classifier")(spark, dir).count() == 2L)
+  }
+
+  test("query registry: 85 unique names, Bench's list in q order") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 85 && names.distinct == names && names == names.sorted)
+    // Bench times exactly these, in this order: its JSON keys depend on it
+    assert(SparkEntry.benchQueries == Seq(
+      "q02_parse_number", "q05_regex_extract", "q06_dedup_firstwins",
+      "q07_group_stats", "q10_topk", "q11_fuzzy_topk", "q12_dedup_exact",
+      "q15_token_counts", "q17_sessionize", "q18_extract_turns",
+      "q19_extract_items", "q21_minhash_candidates", "q22_simhash_candidates",
+      "q24_ann_topk", "q25_ann_lsh", "q26_multimodal_meta", "q30_ann_ivf", "q34_lsh_dedup",
+      "q35_distinctive_terms", "q37_contamination", "q38_boilerplate",
+      "q39_asof_join", "q40_range_join", "q41_blocked_match",
+      "q43_repetition", "q44_corpus_filter", "q45_stratified_sample",
+      "q46_pack_sequences", "q47_quantize_int8", "q48_source_filter",
+      "q49_session_window", "q50_contamination_bloom", "q51_dup_spans",
+      "q52_cluster_best", "q53_lexical_commonness", "q54_vocab_topk",
+      "q55_source_mix", "q56_semdedup_pairs", "q57_corpus_chain",
+      "q58_incremental_dedup", "q59_semdedup_keep",
+      "q60_semdedup_incremental", "q61_remove_dup_spans", "q62_bpe_pairs",
+      "q63_pack_whole", "q64_strip_boiler_turns", "q65_length_profile",
+      "q66_conv_integrity", "q67_global_shuffle", "q68_hash_classifier",
+      "q69_truncate_context", "q70_chunk_docs", "q71_conv_dedup",
+      "q72_agent_loops", "q73_repair_order", "q74_preference_pairs",
+      "q75_temperature_sample", "q76_dup_flow_matrix", "q77_curriculum",
+      "q78_transcript_chain", "q79_kmv_sketch", "q80_tool_transitions",
+      "q81_bottomk_sample", "q82_centroid_sim", "q83_epoch_repeats",
+      "q84_bottomk_per_group", "q85_oov_audit"))
   }
 
   test("committed-only read hides uncommitted chunks and audits checksums") {
@@ -205,14 +268,14 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         graft.expr.signatures.minhash_sig(graft.dedup.Dedup.shingles(col("text"), 3), 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val mHof = docs.select(col("doc_id"),
-        graft.dedup.Dedup.minhashSigHof(col("text"), 3, 32).as("sig"))
+        graft.ref.DedupRef.minhashSig(col("text"), 3, 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(mExpr == mHof)
     val sExpr = docs.select(col("doc_id"),
         graft.expr.signatures.simhash_blocks(graft.dedup.Dedup.tokens(col("text"))).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val sHof = docs.select(col("doc_id"),
-        graft.dedup.Dedup.simhashBlocksHof(col("text")).as("b"))
+        graft.ref.DedupRef.simhashBlocks(col("text")).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sExpr == sHof)
   }

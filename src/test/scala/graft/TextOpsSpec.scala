@@ -62,7 +62,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df,
         graft.dedup.Dedup.tokens(col("text")),
-        graft.dedup.Dedup.tokensHof(col("text")), "tokens")
+        graft.ref.DedupRef.tokens(col("text")), "tokens")
     }
   }
 
@@ -70,14 +70,14 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf); k <- Seq(3, 8)) {
       assertColsEqual(df,
         graft.dedup.Dedup.shingles(col("text"), k),
-        graft.dedup.Dedup.shinglesHof(col("text"), k), s"shingles k=$k")
+        graft.ref.DedupRef.shingles(col("text"), k), s"shingles k=$k")
     }
   }
 
   test("GramHashes == positionalGrams + md5Hash60 (k=8)") {
     // HOF reference: positional grams joined then hashed per gram
     def hofHashes(t: org.apache.spark.sql.Column, k: Int) = {
-      val toks = graft.dedup.Dedup.tokensHof(t)
+      val toks = graft.ref.DedupRef.tokens(t)
       val n = size(toks)
       val zipped = arrays_zip((0 until k).map(j => slice(toks, lit(j + 1), n - (k - 1))): _*)
       val joined = transform(zipped,
@@ -94,7 +94,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("TopRunCount / TwoGramCounts == HOF repetition pieces") {
     val (_, natTop, natN2, natDup) = graft.text.TextAnalysis.repetitionPieces(col("text"))
-    val (_, hofTop, hofN2, hofDup) = graft.text.TextAnalysis.repetitionPiecesHof(col("text"))
+    val (_, hofTop, hofN2, hofDup) = graft.ref.TextAnalysisRef.repetitionPieces(col("text"))
     for (df <- Seq(docsDf, advDf)) {
       assertColsEqual(df, natTop, hofTop, "top_run_count")
       assertColsEqual(df, natN2, hofN2, "n_2grams")
@@ -106,7 +106,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (df <- Seq(docsDf, advDf); k <- Seq(2, 8)) {
       assertColsEqual(df,
         graft.expr.textops.shingle_hashes(col("text"), k),
-        transform(graft.dedup.Dedup.shinglesHof(col("text"), k),
+        transform(graft.ref.DedupRef.shingles(col("text"), k),
           g => graft.dedup.Dedup.md5Hash60(g)), s"shingle_hashes k=$k")
     }
   }
@@ -114,7 +114,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ClassifierScore == HOF hashClassifierScore (nBuckets 2^10 and 2^20)") {
     for (src <- Seq(docsDf, advDf); nb <- Seq(1 << 10, 1 << 20)) {
       val nat = graft.text.TextAnalysis.hashClassifierScore(src, "doc_id", "text", nb)
-      val hof = graft.text.TextAnalysis.hashClassifierScoreHof(src, "doc_id", "text", nb)
+      val hof = graft.ref.TextAnalysisRef.hashClassifierScore(src, "doc_id", "text", nb)
       val n = nat.collect().map(r => r.get(0) -> (r.get(1), r.get(2), r.get(3))).toMap
       val h = hof.collect().map(r => r.get(0) -> (r.get(1), r.get(2), r.get(3))).toMap
       assert(n.nonEmpty && n.keySet == h.keySet)
@@ -133,7 +133,7 @@ class TextOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = Seq(Row(0L, Seq("a", null, "b")), Row(1L, Seq("a", "b")), Row(2L, null),
       Row(3L, Seq(null)), Row(4L, Seq.empty[String]))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val hof = graft.text.TextAnalysis.hashClassifierScoreHof(
+    val hof = graft.ref.TextAnalysisRef.hashClassifierScore(
       spark.createDataFrame(Seq((1L, "a b"))).toDF("doc_id", "text"), "doc_id", "text", 1024)
       .head()
     for (wholeStage <- Seq("true", "false"); mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {

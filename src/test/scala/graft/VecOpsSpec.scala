@@ -69,7 +69,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val both = a.crossJoin(b)
       .select(col("ia"), col("ib"),
         graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
-        graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+        graft.ref.SimilarityRef.cosine(col("va"), col("vb")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -95,7 +95,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .where(col("va").isNull || col("vb").isNull || !divisorZero(col("va"), col("vb")))
       .select(col("ia"), col("ib"),
         graft.ann.Similarity.cosine(col("va"), col("vb")).as("nat"),
-        graft.ann.Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+        graft.ref.SimilarityRef.cosine(col("va"), col("vb")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -112,7 +112,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         zeros.where(col("id") === 0).select(c(col("v")).as("c")).collect()
       }
     val eNat = run(v => graft.ann.Similarity.cosine(v, v))
-    val eHof = run(v => graft.ann.Similarity.cosineHof(v, v))
+    val eHof = run(v => graft.ref.SimilarityRef.cosine(v, v))
     def msg(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("|")
     assert(msg(eNat).contains("DIVIDE_BY_ZERO"), msg(eNat))
@@ -127,7 +127,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val assigned = emb.crossJoin(broadcast(cl))
       .select(col("id"),
         graft.expr.vecops.nearest_cid(col("v"), col("__cl")).as("nat"),
-        graft.ann.Similarity.nearestCidHof(col("v"), col("__cl")).as("hof"))
+        graft.ref.SimilarityRef.nearestCid(col("v"), col("__cl")).as("hof"))
       .collect()
     assert(assigned.nonEmpty)
     assigned.foreach { r =>
@@ -154,7 +154,7 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val out = probe.crossJoin(broadcast(cl2))
       .select(col("id"),
         graft.expr.vecops.nearest_cid(col("v"), col("__cl")).as("nat"),
-        graft.ann.Similarity.nearestCidHof(col("v"), col("__cl")).as("hof"))
+        graft.ref.SimilarityRef.nearestCid(col("v"), col("__cl")).as("hof"))
       .collect()
     out.foreach { r =>
       assert(r.get(1) == r.get(2),
@@ -168,14 +168,14 @@ class VecOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val got = emb.select(col("vec_id"),
       graft.ann.Similarity.lshBucket(col("v"), weights).as("nat"),
-      graft.ann.Similarity.lshBucketHof(col("v"), weights).as("hof")).collect()
+      graft.ref.SimilarityRef.lshBucket(col("v"), weights).as("hof")).collect()
     assert(got.nonEmpty)
     got.foreach { r => assert(r.get(1) == r.get(2), s"bucket mismatch at ${r.get(0)}") }
     val w8 = graft.ann.Similarity.planeWeights(nPlanes = 5, dim = 8)
     val fz = vecDf(fuzzVectors(64, 8))
     val got2 = fz.select(col("id"),
       graft.ann.Similarity.lshBucket(col("v"), w8).as("nat"),
-      graft.ann.Similarity.lshBucketHof(col("v"), w8).as("hof")).collect()
+      graft.ref.SimilarityRef.lshBucket(col("v"), w8).as("hof")).collect()
     got2.foreach { r =>
       assert(r.get(1) == r.get(2),
         s"bucket adversarial mismatch at id=${r.get(0)}: ${r.get(1)} vs ${r.get(2)}")
